@@ -27,7 +27,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_wrap_spark.session import load_tables
@@ -362,7 +361,3 @@ def queries() -> dict[str, QueryFn]:
 def oracle_sql() -> dict[str, str]:
     queries()
     return dict(_ORACLE)
-
-
-def _dec(col, prec=18, scale=4):
-    return F.col(col).cast(f"decimal({prec},{scale})")

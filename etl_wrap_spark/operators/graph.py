@@ -23,13 +23,25 @@ connected_components (dedup.py) keeps lineage flat for large K.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_wrap_spark.operators.fastpath import _local_result_df, collect_if_small
+
 PR_SCALE = 10**12
+
+# Edge-count limits of the driver fast paths (see fastpath.py). Each
+# frontier iterator schedules per-round jobs whose execution is
+# milliseconds at bench scale (~0.11 s of wall PER DRIVER JOB in the
+# round-6 profile), so under these limits the exact driver kernel wins;
+# at corpus scale the limit always routes distributed. 2^20 edges ≈
+# 17 MB of longs, the same order as a broadcast-join side. PageRank and
+# harmonic centrality use 2^21: q205's sf0.1 graph (1,173,742 edges)
+# sits between the two limits and takes the harmonic driver kernel.
+FRONTIER_DRIVER_EDGE_LIMIT = 1 << 20
+PAGERANK_DRIVER_EDGE_LIMIT = 1 << 21
+HARMONIC_DRIVER_EDGE_LIMIT = 1 << 21
 
 
 def canonical_undirected(
@@ -109,159 +121,10 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
-def _driver_headroom_ok(min_available_mb: int | None = None) -> bool:
-    """True when the driver HOST has enough available memory for a
-    bounded fast-path collect (round-9 VERDICT #1: the numpy fast paths
-    are correct and gated, but on a memory-constrained driver host they
-    lose to the distributed plan they replaced — at 100 TB the driver
-    is always the scarce resource, so low headroom must route
-    distributed AUTOMATICALLY, not crash or thrash).
-
-    Reads /proc/meminfo MemAvailable (the kernel's reclaimable-included
-    estimate); non-Linux or unreadable → permissive True (the gates
-    already bound the collect to ~tens of MB). Threshold default 1 GiB,
-    overridable via SPARK_GRAFT_FASTPATH_MIN_MB (0 disables the guard —
-    parity tests pin both paths regardless of host state)."""
-    if min_available_mb is None:
-        min_available_mb = int(os.environ.get("SPARK_GRAFT_FASTPATH_MIN_MB", "1024"))
-    if min_available_mb <= 0:
-        return True
-    try:
-        with open("/proc/meminfo", encoding="ascii") as fh:
-            for line in fh:
-                if line.startswith("MemAvailable:"):
-                    return int(line.split()[1]) >= min_available_mb * 1024
-    except OSError:
-        pass
-    return True
-
-
-def _arrow_numpy_cols(df):
-    """Collect a (checkpoint-pinned) frame as numpy columns via Arrow
-    record batches, bypassing toPandas's pandas-block construction and
-    per-column coercions — measured 6x on the ~1M-row edge frames the
-    fast paths collect (0.40 s vs 2.5 s), and the resulting contiguous
-    arrays feed np.unique ~6x faster than the pandas-derived ones
-    (guide §4: cross the JVM boundary once, in columnar batches, with
-    only the needed columns). Returns (cols, n_rows, has_null): cols
-    maps name → numpy array (zero-copy for non-null numerics; object
-    arrays for strings/decimals — same values the pandas path carried).
-    Falls back to toPandas when the private batch collector is absent
-    (it is stable across Spark 3.x/4.x; the fallback keeps behavior on
-    any other build)."""
-    try:
-        batches = df._collect_as_arrow()
-    except AttributeError:
-        pdf = df.toPandas()
-        return (
-            {c: pdf[c].to_numpy() for c in pdf.columns},
-            len(pdf),
-            bool(pdf.isna().any().any()),
-        )
-    import pyarrow as pa
-
-    if not batches:
-        return {f.name: None for f in df.schema.fields}, 0, False
-    tbl = pa.Table.from_batches(batches)
-    has_null = any(c.null_count for c in tbl.columns)
-    cols = {name: tbl.column(name).to_numpy() for name in tbl.column_names}
-    return cols, tbl.num_rows, has_null
-
-
-def _local_result_df(spark, data: dict, schema):
-    """Driver-computed result → DataFrame as ONE Arrow batch.
-
-    ``createDataFrame(list-of-tuples)`` parallelizes PICKLED rows over
-    defaultParallelism slices: executing the returned frame then runs
-    ~32 Python-worker deserialization tasks (measured 2.42 s to count a
-    16k-row result). The Arrow path ships the same rows as Arrow record
-    batches decoded JVM-side — and pinning maxRecordsPerBatch to the
-    row count makes it a single batch/task (measured 0.75 s at the
-    default 10k batch size, ~0.2 s single-batch). ``data`` is a dict of
-    equal-length columns (numpy arrays or lists) matching ``schema``'s
-    field order; falls back to the plain path if pandas/Arrow are
-    unavailable."""
-    import pandas as pd
-
-    n = max((len(v) for v in data.values()), default=0)
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(max(n, 1)))
-    try:
-        return spark.createDataFrame(pd.DataFrame(data), schema)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _pinned_small_edges(
-    edges: DataFrame, cols: list, small_graph_limit: int, as_pandas: bool = False
-):
-    """AQE-style adaptive strategy pick shared by the frontier
-    iterators (the dedup-CC precedent): pin the edge projection (every
-    round joins it — the checkpoint happens regardless of path), count
-    it, and when it holds ≤ ``small_graph_limit`` rows return
-    (pinned_frame, collected_rows) so the caller can run the exact
-    driver-side algorithm instead of scheduling per-round jobs whose
-    execution is milliseconds (the round-6 profile: ~0.11 s of wall PER
-    DRIVER JOB at bench scale). Above the limit returns
-    (pinned_frame, None) and the distributed iteration proceeds
-    unchanged — at corpus scale the limit (default 2^20 edges ≈ 17 MB
-    of longs, the same order as a broadcast-join side) always routes
-    distributed. Collection rides Arrow (toPandas) — measured 0.46 s
-    for 587k edges where row collect() takes ~3x that. Limit 0
-    disables collection.
-
-    ``as_pandas=True`` returns the Arrow pandas frame itself instead of
-    a tuple list — the numpy CSR consumers index columns directly, and
-    itertuples over a ~1M-row frame measured ~2 s of pure interpreter
-    work the arrays never needed (round 8).
-
-    The size probe is a plain map-side count() — round-10 measured the
-    two tempting "one-job" alternatives and both lose: probing with
-    limit(L+1).toPandas() collects-and-discards ~16 MB of Arrow batches
-    whenever the graph is OVER the limit (q157/q205 regressed 1.5-1.7x;
-    over-limit is the 100-TB common case), and limit(L+1).count() plans
-    a GlobalLimit whose LocalLimit feeders shuffle every partition's
-    rows to ONE task (worse than the count it replaces). count() moves
-    only per-partition longs, and on the checkpoint-pinned frame the
-    scan it pays is work the first downstream job needed anyway."""
-    pinned = edges.select(*cols).localCheckpoint(eager=False)
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        pinned.count() <= small_graph_limit
-    ):
-        np_cols, n_rows, has_null = _arrow_numpy_cols(pinned)
-        if has_null:
-            # NULL endpoints: equi-joins never match them, but a NULL
-            # node still surfaces in union-distinct node sets, so the
-            # distributed plans DEFINE the semantics; numpy's
-            # unique/searchsorted cannot represent None (round-8
-            # ADVICE) — route such graphs distributed.
-            return pinned, None
-        if as_pandas:
-            import pandas as pd
-
-            if n_rows == 0:
-                return pinned, pd.DataFrame({k: [] for k in np_cols})
-            # assembled from the Arrow numpy columns: block
-            # consolidation is one memcpy of the already-typed arrays,
-            # nothing like toPandas's per-batch concat (see
-            # _arrow_numpy_cols)
-            return pinned, pd.DataFrame(np_cols)
-        if n_rows == 0:
-            return pinned, []
-        return pinned, list(
-            zip(*(np_cols[f.name].tolist() for f in pinned.schema.fields))
-        )
-    return pinned, None
-
-
 def _csr_adjacency(src_a, dst_a):
     """Build (node_arr, indptr, nbr) CSR arrays from numpy src/dst
-    columns — the shared substrate for the vectorized driver BFS fast
-    paths (no per-node Python loops: every frontier expansion is numpy
+    columns — the substrate of bfs_hops's vectorized driver fast path
+    (no per-node Python loops: every frontier expansion is numpy
     gather + unique)."""
     import numpy as np
 
@@ -311,7 +174,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    small_graph_limit: int = 1 << 20,
 ) -> DataFrame:
     """Multi-source BFS → (node, hops) with hops = min #edges from any
     source, bounded at ``max_hops`` (unreached nodes are absent).
@@ -334,20 +196,20 @@ def bfs_hops(
     eager form, but the per-round materialization jobs collapse into
     the consumer's job — the round-6 profile measured the iterative
     family's wall as ~0.11 s per driver job at sf0.1, so job count,
-    not data volume, set the constant.
+    not data volume, set the constant. Edge lists within
+    FRONTIER_DRIVER_EDGE_LIMIT run as a vectorized CSR BFS on the
+    driver instead.
     """
-    e, pdf = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
+    e, cols = collect_if_small(
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")),
+        FRONTIER_DRIVER_EDGE_LIMIT,
     )
     # no .distinct() before the collect: np.unique dedups driver-side,
     # and the distinct's shuffle costs an extra AQE stage job per build
     seed_list = (
         [s for (s,) in sources.select(
             F.col(node_col).alias("node")).collect()]
-        if pdf is not None and len(pdf) else None
+        if cols is not None and len(cols["__s"]) else None
     )
     # A NULL seed is representable distributed (the visited-seed
     # initialization emits the (NULL, 0) row) but not in the numpy
@@ -355,9 +217,7 @@ def bfs_hops(
     if seed_list is not None and not any(s is None for s in seed_list):
         import numpy as np
 
-        node_arr, indptr, nbr = _csr_adjacency(
-            pdf["__s"].to_numpy(), pdf["__d"].to_numpy()
-        )
+        node_arr, indptr, nbr = _csr_adjacency(cols["__s"], cols["__d"])
         seed_vals = np.unique(np.array(seed_list))
         pos = np.searchsorted(node_arr, seed_vals)
         in_graph = (pos < len(node_arr)) & (node_arr[np.minimum(pos, len(node_arr) - 1)] == seed_vals)
@@ -455,7 +315,6 @@ def pagerank_fixedpoint(
     checkpoint_every: int = 8,
     seeds: DataFrame | None = None,
     weight: str | None = None,
-    small_graph_limit: int = 1 << 21,
 ) -> DataFrame:
     """K-iteration PageRank → (node, rank_fp) with rank_fp a scaled
     bigint (sum ≈ ``scale``; floor-truncation leaks only downward).
@@ -499,8 +358,6 @@ def pagerank_fixedpoint(
     e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"), *wcols)
     if weight is not None:
         e = e.where(F.col("__w") > 0)
-    e = e.localCheckpoint(eager=False)
-    # AQE-style adaptive strategy pick (the CC/BFS precedent, round 8):
     # when the pinned edge list is tiny, run the IDENTICAL fixed-point
     # arithmetic on the driver in int64 numpy — same scaled-integer
     # floor divisions (all operands nonnegative, so truncation == floor
@@ -509,73 +366,67 @@ def pagerank_fixedpoint(
     # scheduling 2-3 jobs per iteration whose execution is
     # milliseconds. Above the limit the distributed iteration proceeds
     # unchanged; at corpus scale it always does.
-    if small_graph_limit > 0 and e.count() <= small_graph_limit:
-        np_cols, n_rows, has_null = _arrow_numpy_cols(e)
-        # NULL endpoints route distributed (the joins define their
-        # semantics) — previously the pandas collect surfaced them as
-        # NaN-widened float columns that np.unique/searchsorted would
-        # mangle (the round-8/round-10 NaN-guard class, now uniform
-        # across the fast paths via the Arrow null_count check)
-        if n_rows and not has_null:
-            import numpy as np
+    e, np_cols = collect_if_small(e, PAGERANK_DRIVER_EDGE_LIMIT)
+    if np_cols is not None and len(np_cols["__src"]):
+        import numpy as np
 
-            src_a = np_cols["__src"]
-            dst_a = np_cols["__dst"]
-            node_arr = np.unique(np.concatenate([src_a, dst_a]))
-            n_all = len(node_arr)
-            sidx = np.searchsorted(node_arr, src_a)
-            didx = np.searchsorted(node_arr, dst_a)
-            w_a = np_cols["__w"].astype(np.int64) if weight is not None else None
-            degd = np.zeros(n_all, dtype=np.int64)
-            np.add.at(degd, sidx, w_a if weight is not None else 1)
-            if seeds is None:
-                n_base = n_all
-                base_arr = np.full(
-                    n_all,
-                    (scale * (damping_den - damping_num)) // (damping_den * n_all),
-                    dtype=np.int64,
-                )
-                r_arr = np.full(n_all, scale // n_all, dtype=np.int64)
-            else:
-                # NULL seeds drop out of the distributed left-semi join
-                # against the node set; filtering here is value-identical
-                # (and np.unique cannot hold None — round-8 ADVICE)
-                # collect without .distinct(): np.unique dedups, and the
-                # distinct's shuffle is an extra AQE stage job per build
-                seed_vals = np.unique(
-                    np.array([row[0] for row in
-                              seeds.select("node").collect()
-                              if row[0] is not None])
-                )
-                is_seed = np.isin(node_arr, seed_vals)
-                n_base = int(is_seed.sum())
-                if n_base == 0:
-                    raise ValueError(
-                        "personalized PageRank: no seed node is in the graph"
-                    )
-                b = (scale * (damping_den - damping_num)) // (damping_den * n_base)
-                base_arr = np.where(is_seed, np.int64(b), np.int64(0))
-                r_arr = np.where(is_seed, np.int64(scale // n_base), np.int64(0))
-            num = np.int64(damping_num)
-            den = np.int64(damping_den)
-            for _ in range(iterations):
-                t = r_arr[sidx] * num
-                if weight is not None:
-                    t = t * w_a
-                t //= den * degd[sidx]
-                acc = np.zeros(n_all, dtype=np.int64)
-                np.add.at(acc, didx, t)
-                r_arr = base_arr + acc
-            id_type = e.schema[0].dataType
-            schema = T.StructType(
-                [
-                    T.StructField("node", id_type),
-                    T.StructField("rank_fp", T.LongType()),
-                ]
+        src_a = np_cols["__src"]
+        dst_a = np_cols["__dst"]
+        node_arr = np.unique(np.concatenate([src_a, dst_a]))
+        n_all = len(node_arr)
+        sidx = np.searchsorted(node_arr, src_a)
+        didx = np.searchsorted(node_arr, dst_a)
+        w_a = np_cols["__w"].astype(np.int64) if weight is not None else None
+        degd = np.zeros(n_all, dtype=np.int64)
+        np.add.at(degd, sidx, w_a if weight is not None else 1)
+        if seeds is None:
+            n_base = n_all
+            base_arr = np.full(
+                n_all,
+                (scale * (damping_den - damping_num)) // (damping_den * n_all),
+                dtype=np.int64,
             )
-            return _local_result_df(
-                edges.sparkSession, {"node": node_arr, "rank_fp": r_arr}, schema
+            r_arr = np.full(n_all, scale // n_all, dtype=np.int64)
+        else:
+            # NULL seeds drop out of the distributed left-semi join
+            # against the node set; filtering here is value-identical
+            # (and np.unique cannot hold None — round-8 ADVICE)
+            # collect without .distinct(): np.unique dedups, and the
+            # distinct's shuffle is an extra AQE stage job per build
+            seed_vals = np.unique(
+                np.array([row[0] for row in
+                          seeds.select("node").collect()
+                          if row[0] is not None])
             )
+            is_seed = np.isin(node_arr, seed_vals)
+            n_base = int(is_seed.sum())
+            if n_base == 0:
+                raise ValueError(
+                    "personalized PageRank: no seed node is in the graph"
+                )
+            b = (scale * (damping_den - damping_num)) // (damping_den * n_base)
+            base_arr = np.where(is_seed, np.int64(b), np.int64(0))
+            r_arr = np.where(is_seed, np.int64(scale // n_base), np.int64(0))
+        num = np.int64(damping_num)
+        den = np.int64(damping_den)
+        for _ in range(iterations):
+            t = r_arr[sidx] * num
+            if weight is not None:
+                t = t * w_a
+            t //= den * degd[sidx]
+            acc = np.zeros(n_all, dtype=np.int64)
+            np.add.at(acc, didx, t)
+            r_arr = base_arr + acc
+        id_type = e.schema[0].dataType
+        schema = T.StructType(
+            [
+                T.StructField("node", id_type),
+                T.StructField("rank_fp", T.LongType()),
+            ]
+        )
+        return _local_result_df(
+            edges.sparkSession, {"node": node_arr, "rank_fp": r_arr}, schema
+        )
     nodes = (
         e.select(F.col("__src").alias("node"))
         .union(e.select(F.col("__dst").alias("node")))
@@ -708,7 +559,6 @@ def sssp_bounded(
     dst: str = "dst",
     weight: str = "w",
     node_col: str = "node",
-    small_graph_limit: int = 1 << 20,
 ) -> DataFrame:
     """Bounded-hop weighted shortest path (multi-source) → (node, cost)
     with cost = min total edge weight over any path of ≤ ``max_hops``
@@ -729,19 +579,21 @@ def sssp_bounded(
     — on small-diameter trade/link graphs the improved set collapses
     after 2-3 rounds. Edge frame checkpointed once (every round joins
     it); per-round best/frontier frames are node-sized and pinned
-    (the CC/PageRank lineage discipline)."""
-    e, rows = _pinned_small_edges(
-        edges,
-        [
+    (the CC/PageRank lineage discipline). Edge lists within
+    FRONTIER_DRIVER_EDGE_LIMIT relax on the driver instead."""
+    e, cols = collect_if_small(
+        edges.select(
             F.col(src).alias("__s"),
             F.col(dst).alias("__d"),
             F.col(weight).cast("bigint").alias("__w"),
-        ],
-        small_graph_limit,
+        ),
+        FRONTIER_DRIVER_EDGE_LIMIT,
     )
-    if rows is not None:
+    if cols is not None:
         adj: dict = {}
-        for u, v, w in rows:
+        for u, v, w in zip(
+            cols["__s"].tolist(), cols["__d"].tolist(), cols["__w"].tolist()
+        ):
             adj.setdefault(u, []).append((v, w))
         # collect without .distinct(): the dict collapses duplicates,
         # and the distinct's shuffle is an extra AQE stage job per build
@@ -874,7 +726,6 @@ def bfs_hops_labeled(
     src: str = "src",
     dst: str = "dst",
     node_col: str = "node",
-    small_graph_limit: int = 0,
 ) -> DataFrame:
     """Per-source BFS distances → (source, node, hops) with hops = min
     #edges from THAT source (≤ ``max_hops``; unreached pairs absent) —
@@ -889,68 +740,19 @@ def bfs_hops_labeled(
     at web scale this is exactly HyperBall's exact-small-seed
     counterpart).
 
-    The driver fast path stays OPT-IN (limit 0): unlike bfs_hops, the
-    OUTPUT here is the |S|·|reach| relation — driver-sized
-    materialization + re-upload of ~1M rows measured SLOWER than the
-    distributed iteration at every scale where the operator matters
-    (round 7 with dict BFS, re-measured round 8 with the vectorized CSR
-    form: 10.6 s vs 3.9 s on q205). The CSR implementation remains for
-    genuinely tiny graphs where a caller opts in."""
-    e, pdf_e = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
-    )
-    seed_vals = None
-    if pdf_e is not None and len(pdf_e):
-        # dedup driver-side (dict.fromkeys keeps first-seen order) —
-        # the distinct's shuffle is an extra AQE stage job per build
-        seed_vals = list(dict.fromkeys(
-            s for (s,) in sources.select(
-                F.col(node_col).alias("source")).collect()))
-        if any(s is None for s in seed_vals):
-            # NULL seed: np.searchsorted cannot compare None against the
-            # node array (round-9 ADVICE — bfs_hops/pagerank/harmonic got
-            # this guard in round 8; this path was missed). The
-            # distributed frontier below defines the semantics: the NULL
-            # seed emits its own hops-0 row and never equi-joins an edge.
-            seed_vals = None
-    if seed_vals is not None:
-        import numpy as np
+    There is no driver fast path: the OUTPUT here is the |S|·|reach|
+    relation, and driver-sized materialization + re-upload of ~1M rows
+    measured SLOWER than the distributed iteration at every scale where
+    the operator matters (10.6 s vs 3.9 s on q205)."""
+    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    return _labeled_frontier(e.localCheckpoint(eager=False), sources, max_hops, node_col)
 
-        node_arr, indptr, nbr = _csr_adjacency(
-            pdf_e["__s"].to_numpy(), pdf_e["__d"].to_numpy()
-        )
-        srcs_out = []
-        nodes_out = []
-        hops_out = []
-        n = len(node_arr)
-        for s in seed_vals:
-            pos = int(np.searchsorted(node_arr, s))
-            if pos >= n or node_arr[pos] != s:
-                srcs_out.append(s)
-                nodes_out.append(s)
-                hops_out.append(0)
-                continue
-            dist = _csr_bfs(indptr, nbr, np.array([pos]), max_hops)
-            reached = np.flatnonzero(dist >= 0)
-            srcs_out.extend([s] * len(reached))
-            nodes_out.extend(node_arr[reached].tolist())
-            hops_out.extend(dist[reached].tolist())
-        id_type = e.schema[0].dataType
-        schema = T.StructType(
-            [
-                T.StructField("source", id_type),
-                T.StructField("node", id_type),
-                T.StructField("hops", T.LongType()),
-            ]
-        )
-        return _local_result_df(
-            edges.sparkSession,
-            {"source": srcs_out, "node": nodes_out, "hops": hops_out},
-            schema,
-        )
+
+def _labeled_frontier(
+    e: DataFrame, sources: DataFrame, max_hops: int, node_col: str
+) -> DataFrame:
+    """bfs_hops_labeled's distributed frontier over an already-pinned
+    (__s, __d) edge frame."""
     visited = (
         sources.select(F.col(node_col).alias("source"))
         .distinct()
@@ -986,7 +788,6 @@ def harmonic_centrality(
     dst: str = "dst",
     node_col: str = "node",
     include_sources: bool = False,
-    small_graph_limit: int = 1 << 21,
 ) -> DataFrame:
     """Hop-bounded harmonic centrality w.r.t. a seed cohort →
     (node, n_sources, harmonic_micro): Σ over seeds s of
@@ -999,7 +800,8 @@ def harmonic_centrality(
     ``include_sources``, from the output. Cost: one labeled BFS
     (bounded seed cohort) + one aggregation.
 
-    Small-graph fast path (round 8): the measure never needs per-seed
+    Small-graph fast path (edge lists within HARMONIC_DRIVER_EDGE_LIMIT):
+    the measure never needs per-seed
     IDENTITY, only per-node seed COUNTS at each distance — so instead
     of materializing the |S|·|reach| labeled relation (which made a
     driver fast path LOSE here, see bfs_hops_labeled), propagate one
@@ -1009,18 +811,18 @@ def harmonic_centrality(
     popcount(new bits at level d) gives the exact count feeding
     Σ 10⁶ div d. Three vectorized scatter rounds over the collected
     edge arrays replace the labeled join ladder; value-parity with the
-    distributed path is pytest-pinned."""
-    e, pdf_e = _pinned_small_edges(
-        edges,
-        [F.col(src).alias("__s"), F.col(dst).alias("__d")],
-        small_graph_limit,
-        as_pandas=True,
+    distributed path is pytest-pinned. Past the limit the labeled
+    frontier runs over the same pinned edge projection, so the caller's
+    edge pipeline executes once on either route."""
+    e, cols = collect_if_small(
+        edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d")),
+        HARMONIC_DRIVER_EDGE_LIMIT,
     )
-    if pdf_e is not None and len(pdf_e):
+    if cols is not None and len(cols["__s"]):
         import numpy as np
 
-        src_a = pdf_e["__s"].to_numpy()
-        dst_a = pdf_e["__d"].to_numpy()
+        src_a = cols["__s"]
+        dst_a = cols["__d"]
         node_arr = np.unique(np.concatenate([src_a, dst_a]))
         n = len(node_arr)
         sidx = np.searchsorted(node_arr, src_a)
@@ -1084,7 +886,7 @@ def harmonic_centrality(
             },
             schema,
         )
-    vis = bfs_hops_labeled(edges, sources, max_hops, src, dst, node_col)
+    vis = _labeled_frontier(e, sources, max_hops, node_col)
     pos = vis.where(F.col("hops") > 0)
     out = pos.groupBy("node").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sources"),

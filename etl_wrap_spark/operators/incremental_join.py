@@ -28,6 +28,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from etl_wrap_spark.operators.fastpath import _local_result_df, collect_if_small
 
 W = "_w"
 
@@ -107,13 +110,15 @@ def merge_join_delta(
 
 # --------------------------------------------------- hierarchy flatten
 
+# Pointer-row limit of the driver chain-walk fast paths (fastpath.py).
+HIERARCHY_DRIVER_EDGE_LIMIT = 1 << 17
+
 
 def flatten_hierarchy(
     edges: DataFrame,
     child_col: str = "child",
     parent_col: str = "parent",
     max_iter: int = 40,
-    small_graph_limit: int = 1 << 17,
 ) -> DataFrame:
     """(node, root, depth) for a forest given (child, parent) edges —
     the org-chart / BOM-explosion operator relational engines express
@@ -132,52 +137,22 @@ def flatten_hierarchy(
     Roots are nodes that never appear as a child, or whose parent is
     NULL/self; cycles would never converge and raise after max_iter.
     """
-    ptr = (
+    # Small-forest fast path (the ancestor_closure discipline): memoized
+    # parent-chain walk on the driver when the pinned pointer table is
+    # tiny and each child has one parent; cycles or DAGs fall through to
+    # the doubling loop (which raises / min-resolves them). The
+    # (node, root, depth) result re-enters Spark through the Arrow
+    # createDataFrame path, not a row-pickled LocalRelation (list-of-
+    # tuples upload measured 3-4x the pandas route to execute).
+    links, cols = collect_if_small(
         edges.where(
             F.col(parent_col).isNotNull() & (F.col(child_col) != F.col(parent_col))
-        )
-        .select(
-            F.col(child_col).alias("node"),
-            F.col(parent_col).alias("anc"),
-            F.lit(1).cast("bigint").alias("depth"),
-            F.lit(False).alias("done"),
-        )
-        .localCheckpoint(eager=False)
+        ).select(F.col(child_col).alias("node"), F.col(parent_col).alias("anc")),
+        HIERARCHY_DRIVER_EDGE_LIMIT,
     )
-    # Small-forest fast path (round 8, the ancestor_closure discipline):
-    # memoized parent-chain walk on the driver when the pinned pointer
-    # table is tiny and each child has one parent; cycles or DAGs fall
-    # through to the doubling loop (which raises / min-resolves them).
-    # small_graph_limit=0 disables the fast path (the graph.py adaptive
-    # convention — round-8 ADVICE), so parity tests can force the
-    # distributed doubling loop. The size probe is a plain map-side
-    # count, the collect runs only when proven small, and the
-    # (node, root, depth) result
-    # re-enters Spark through the Arrow createDataFrame path, not a
-    # row-pickled LocalRelation (round-10: list-of-tuples upload
-    # measured 3-4x the pandas route to execute).
-    from etl_wrap_spark.operators.graph import (
-        _arrow_numpy_cols,
-        _driver_headroom_ok,
-        _local_result_df,
-    )
-
-    cols = None
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        ptr.count() <= small_graph_limit
-    ):
-        # map-side count probe; rows move only when the forest is small.
-        # Arrow-direct collect (round 12, the C5 helper): no pandas block
-        # construction, and the null guard is the Arrow null_count — a
-        # NULL routes distributed instead of NaN-widening the id dtype.
-        np_cols, n_rows, has_null = _arrow_numpy_cols(ptr.select("node", "anc"))
-        if not has_null:
-            cols = np_cols if n_rows else {"node": [], "anc": []}
     if cols is not None:
-        from pyspark.sql import types as T
-
-        kids = list(cols["node"]) if not hasattr(cols["node"], "tolist") else cols["node"].tolist()
-        pars = list(cols["anc"]) if not hasattr(cols["anc"], "tolist") else cols["anc"].tolist()
+        kids = cols["node"].tolist()
+        pars = cols["anc"].tolist()
         if len(set(kids)) == len(kids):
             parent = dict(zip(kids, pars))
             memo: dict = {}  # node -> (root, depth-to-root)
@@ -198,7 +173,7 @@ def flatten_hierarchy(
                 for i, c in enumerate(reversed(chain), 1):
                     memo[c] = (root, base + i)
             if ok:
-                id_type = ptr.schema[0].dataType
+                id_type = links.schema[0].dataType
                 schema = T.StructType(
                     [
                         T.StructField("node", id_type),
@@ -206,8 +181,6 @@ def flatten_hierarchy(
                         T.StructField("depth", T.LongType()),
                     ]
                 )
-                # single-Arrow-batch re-entry (graph._local_result_df):
-                # one batch/task instead of 32 pickled-row slices
                 return _local_result_df(
                     edges.sparkSession,
                     {
@@ -217,6 +190,12 @@ def flatten_hierarchy(
                     },
                     schema,
                 )
+    ptr = links.select(
+        "node",
+        "anc",
+        F.lit(1).cast("bigint").alias("depth"),
+        F.lit(False).alias("done"),
+    )
     # ancestors that are roots (no incoming pointer) terminate the jump
     for _ in range(max_iter):
         hop = ptr.select(
@@ -250,7 +229,6 @@ def ancestor_closure(
     child_col: str = "child",
     parent_col: str = "parent",
     max_iter: int = 40,
-    small_graph_limit: int = 1 << 17,
     known_small: bool = False,
 ) -> DataFrame:
     """ALL (node, anc, dist) ancestor pairs of a forest — the full
@@ -277,53 +255,28 @@ def ancestor_closure(
     execute at 41k rows where the broadcast walk is one ordinary job).
     Guarded by an output budget (Σ depths ≤ 2^22 — depth is computed
     O(N) first, so a pathological deep chain routes distributed
-    without generating anything). The size probe is a plain map-side
-    count (limit-based probes lose both ways — measured in
-    graph._pinned_small_edges); the Arrow collect runs only in the
-    proven-small case.
+    without generating anything). The gate is fastpath.collect_if_small
+    with HIERARCHY_DRIVER_EDGE_LIMIT.
+
+    ``known_small=True`` is a CALLER ASSERTION that the edge list is
+    statically bounded (e.g. q132's `c_custkey <= 4095` filter): the
+    size-probe job is then skipped — the one scheduled job it saves is
+    ~40% of such a query's total build+execute cost at bench scale. The
+    limit is still enforced after the collect, so a wrong assertion
+    costs one oversized collect, never a wrong result.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    p = (
-        edges.select(
-            F.col(child_col).alias("node"),
-            F.col(parent_col).alias("anc"),
-            F.lit(1).cast("bigint").alias("dist"),
-        )
+    p, cols = collect_if_small(
+        edges.select(F.col(child_col).alias("node"), F.col(parent_col).alias("anc"))
         .where(F.col("node") != F.col("anc"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        HIERARCHY_DRIVER_EDGE_LIMIT,
+        known_small=known_small,
     )
-    from etl_wrap_spark.operators.graph import _driver_headroom_ok
-
     n_prev = None
-    pdf = None
-    # small_graph_limit=0 disables the fast path (graph.py convention —
-    # round-8 ADVICE) so tests can pin fast == distributed directly.
-    # Capped-count probe: rows move only when the forest is small.
-    # known_small=True is a CALLER ASSERTION that the edge list is
-    # statically bounded (e.g. q132's `c_custkey <= 4095` filter): the
-    # probe job is then redundant — the one scheduled job it saves is
-    # ~40% of such a query's total build+execute cost at bench scale
-    # (round-10 verdict ask #7). The headroom gate still applies, and
-    # the post-collect len() enforces the limit anyway (an over-limit
-    # collect falls through to the distributed squaring; the assertion
-    # being wrong costs one oversized collect, never a wrong result).
-    if small_graph_limit > 0 and _driver_headroom_ok() and (
-        known_small or p.count() <= small_graph_limit
-    ):
-        # Arrow-direct collect (round 12): same §4 pattern as the graph
-        # fast paths — no pandas coercion, NULLs route distributed via
-        # the Arrow null_count instead of NaN-widening the id columns
-        from etl_wrap_spark.operators.graph import _arrow_numpy_cols
-
-        np_cols, n_prev, has_null = _arrow_numpy_cols(p.select("node", "anc"))
-        if not has_null and n_prev <= small_graph_limit:
-            pdf = np_cols if n_prev else {"node": [], "anc": []}
-    if pdf is not None:
-        kids = pdf["node"].tolist() if hasattr(pdf["node"], "tolist") else list(pdf["node"])
-        pars = pdf["anc"].tolist() if hasattr(pdf["anc"], "tolist") else list(pdf["anc"])
+    if cols is not None:
+        kids = cols["node"].tolist()
+        pars = cols["anc"].tolist()
+        n_prev = len(kids)
         if len(set(kids)) == len(kids):  # forest: one parent per child
             parent = dict(zip(kids, pars))
             depth: dict = {}
@@ -373,7 +326,8 @@ def ancestor_closure(
                             {"node": nodes, "anc": ancs, "dist": dists}
                         )
 
-                return p.select("node", "anc").mapInPandas(_walk, schema)
+                return p.mapInPandas(_walk, schema)
+    p = p.withColumn("dist", F.lit(1).cast("bigint"))
     if n_prev is None:
         n_prev = p.count()
     for _ in range(max_iter):

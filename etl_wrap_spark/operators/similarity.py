@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_wrap_spark.operators.fastpath import driver_route_open
+
 DIM = 64
 
 # deterministic hyperplanes for sign-LSH, shared with the SQL oracle
@@ -479,13 +481,14 @@ def _collect_small(df: DataFrame):
 
 def _centroid_rows(cent: DataFrame, n_cells: int | None):
     """Collect (cell, kv, kn) for the literal fast path, or None when it
-    must not apply: unknown/large cell count, non-contiguous cell ids, or
-    non-finite values (repr round-trip is only pinned for finite doubles).
-    kn is computed in the JVM BEFORE collecting so the norm bits are the
-    ones the distributed path would have used."""
+    must not apply: the driver route is closed (fastpath.py), unknown or
+    large cell count, non-contiguous cell ids, or non-finite values
+    (repr round-trip is only pinned for finite doubles). kn is computed
+    in the JVM BEFORE collecting so the norm bits are the ones the
+    distributed path would have used."""
     import math
 
-    if n_cells is None or n_cells > IVF_DRIVER_CENT_LIMIT:
+    if n_cells is None or n_cells > IVF_DRIVER_CENT_LIMIT or not driver_route_open():
         return None
     rows = _collect_small(cent.withColumn("__kn", norm_expr("kv")).select("cell", "kv", "__kn"))
     if not rows or len(rows) > IVF_DRIVER_CENT_LIMIT:
@@ -586,15 +589,19 @@ def _query_cells_lit(
     # top-nprobe WITHOUT a window (§2.4): a query's whole affinity array
     # lives in its own row, so the probe selection is a map-side
     # array_sort + slice — no explode-then-shuffle, no row_number. The
-    # comparator replays the window's (aff DESC, cell ASC) total order
-    # exactly: NaN sorts greatest (first under DESC, like Spark's
-    # nan-safe sort), and -0.0 = 0.0 ties fall through to the cell
-    # tie-break (SortOrder normalizes -0.0 before comparing, `=` here
-    # does the same).
+    # comparator replays the window's (aff DESC NULLS LAST, cell ASC)
+    # total order exactly: NULL (a short or NULL embedding on either
+    # side) sorts last, NaN sorts greatest (first under DESC, like
+    # Spark's nan-safe sort), and -0.0 = 0.0 ties fall through to the
+    # cell tie-break (SortOrder normalizes -0.0 before comparing, `=`
+    # here does the same).
     cmp = (
         "(l, r) -> CASE"
-        " WHEN (isnan(l.aff) AND isnan(r.aff)) OR l.aff = r.aff THEN"
+        " WHEN (l.aff IS NULL AND r.aff IS NULL)"
+        "  OR (isnan(l.aff) AND isnan(r.aff)) OR l.aff = r.aff THEN"
         "  CASE WHEN l.cell < r.cell THEN -1 WHEN l.cell > r.cell THEN 1 ELSE 0 END"
+        " WHEN l.aff IS NULL THEN 1"
+        " WHEN r.aff IS NULL THEN -1"
         " WHEN isnan(l.aff) THEN -1"
         " WHEN isnan(r.aff) THEN 1"
         " WHEN l.aff > r.aff THEN -1 ELSE 1 END"
@@ -935,10 +942,12 @@ def _pq_residual_lit(
 
 def _codebook_rows(cb: DataFrame, m: int, ks: int):
     """Collect {m: [cw for j=1..ks]} for the literal encode/LUT path, or
-    None when the codebook is not the contiguous finite m x ks grid the
-    literal indexing assumes."""
+    None when the driver route is closed (fastpath.py) or the codebook is
+    not the contiguous finite m x ks grid the literal indexing assumes."""
     import math
 
+    if not driver_route_open():
+        return None
     rows = _collect_small(cb.select("m", "j", "cw"))
     if len(rows) != m * ks:
         return None

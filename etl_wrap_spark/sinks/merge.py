@@ -29,13 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _key_cond(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> Column:
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (left[k] == right[k])
-    return cond
-
-
 def upsert(target: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
     """MERGE: rows of `updates` replace matching `target` rows, else insert.
 

@@ -321,15 +321,6 @@ def _record(op: int, payload: bytes) -> bytes:
     return struct.pack("<HH", op, len(payload)) + payload
 
 
-def _encode_biff_string(s: str) -> bytes:
-    """16-bit-length BIFF8 unicode string (as used by SST and LABEL)."""
-    try:
-        raw, grbit = s.encode("latin-1"), 0
-    except UnicodeEncodeError:
-        raw, grbit = s.encode("utf-16-le"), 1
-    return struct.pack("<HB", len(s), grbit) + raw
-
-
 def _sst_records(strings: Sequence[str]) -> bytes:
     """SST with CONTINUE splits past the record-size limit: between
     strings (the continuation starts with the next string's header) or

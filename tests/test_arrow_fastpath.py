@@ -1,8 +1,9 @@
-"""Focused coverage for the round-11 Arrow driver-transfer helpers.
+"""Focused coverage for the Arrow driver-transfer helpers.
 
-The graph/dedup size-gated fast paths cross the JVM boundary through
-`_arrow_numpy_cols` (collect → numpy columns via Arrow record batches)
-and `_local_result_df` (driver result → DataFrame as one Arrow batch).
+The size-gated driver fast paths (operators/fastpath.py) cross the JVM
+boundary through `_arrow_numpy_cols` (collect → numpy columns via Arrow
+record batches) and `_local_result_df` (driver result → DataFrame as one
+Arrow batch).
 These tests pin the contract the union-find / CSR consumers rely on:
 values, row counts, the null flag that routes back to the distributed
 path, the empty-frame shape, the toPandas fallback, and conf restore.
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from etl_wrap_spark.operators.graph import _arrow_numpy_cols, _local_result_df
+from etl_wrap_spark.operators.fastpath import _arrow_numpy_cols, _local_result_df
 
 
 def test_arrow_numpy_cols_values_and_nonnull(spark):

@@ -5,7 +5,16 @@ cover the distributed paths; these pin the scalar semantics."""
 import pytest
 from pyspark.sql import functions as F
 
-from etl_wrap_spark.operators import dedup, multimodal, similarity, text
+from etl_wrap_spark.operators import (
+    dedup,
+    fastpath,
+    graph,
+    incremental_join,
+    multimodal,
+    similarity,
+    text,
+)
+from etl_wrap_spark.operators.fastpath import distributed_only
 
 
 @pytest.fixture(scope="module")
@@ -1412,13 +1421,46 @@ def test_ivfpq_topk_lit_equals_distributed(spark):
         ]
 
     fast = run()
-    saved = similarity.IVF_DRIVER_CENT_LIMIT
-    try:
-        similarity.IVF_DRIVER_CENT_LIMIT = 0
+    with distributed_only():
         slow = run()
-    finally:
-        similarity.IVF_DRIVER_CENT_LIMIT = saved
     assert fast == slow and len(fast) > 0
+
+
+def test_ivf_topk_lit_probe_order_with_null_affinity(spark):
+    """A centroid shorter than the query embedding gives that cell a NULL
+    affinity (zip_with pads with NULL). The literal probe selection must
+    replay the distributed window's aff DESC NULLS LAST, cell ASC order,
+    so both routes probe the same cells and return the same rows."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    n_cells = 40
+    cent = spark.createDataFrame(
+        [
+            (c, [float(x) for x in rng.standard_normal(3 if c % 3 == 0 else 64)])
+            for c in range(1, n_cells + 1)
+        ],
+        "cell INT, kv ARRAY<DOUBLE>",
+    )
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.standard_normal(64)]) for i in range(200)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+    q = corpus.where("vec_id % 20 = 0")
+
+    def run():
+        return sorted(
+            (r.qid, r.rank, r.cid)
+            for r in similarity.ivf_topk(
+                q, corpus, "vec_id", "vec_id", "embedding",
+                k=3, n_cells=n_cells, nprobe=12, centroids=cent,
+            ).collect()
+        )
+
+    fast = run()
+    with distributed_only():
+        slow = run()
+    assert fast == slow and len(fast) == 30
 
 
 def test_misra_gries_sketch_df_grouped_distributed(spark):
@@ -2054,6 +2096,10 @@ def test_bfs_hops_multi_source_min(spark):
     sources = spark.createDataFrame([(1,), (5,)], ["node"])
     got = {r["node"]: r["hops"] for r in bfs_hops(edges, sources, max_hops=3).collect()}
     assert got == {1: 0, 5: 0, 2: 1, 4: 1, 3: 2}
+    # a NULL seed keeps its own hops-0 row and never equi-joins an edge
+    sources = spark.createDataFrame([(1,), (None,)], "node long")
+    got = {r["node"]: r["hops"] for r in bfs_hops(edges, sources, max_hops=3).collect()}
+    assert got == {1: 0, None: 0, 2: 1, 3: 2, 4: 3}
 
 
 def test_kcore_peel_k4_pendant_and_chain(spark):
@@ -2706,63 +2752,152 @@ def test_value_class_collapse_equivalence(spark):
     assert key(f3) == key(d3) and f3.count() >= 5
 
 
-def test_connected_components_fast_path_matches_distributed(spark):
-    # the small_graph_limit union-find must be label-identical to BOTH
-    # distributed algorithms on chains, cliques, self-loops, string ids,
-    # and random graphs (small_graph_limit=0 forces the distributed run).
-    import random as _r
+# ---- one parity test over every size-gated driver fast path
+#
+# Each case runs an operator three ways: by default (the driver route
+# must be reached), inside distributed_only() (the driver collect must
+# not be reached), and with the headroom check forced closed (any driver
+# collect raises). All three must return the same rows.
 
-    _r.seed(13)
-    edge_sets = [
-        [(i, i + 1) for i in range(30)],                      # long chain
-        [(0, j) for j in range(1, 8)] + [(5, 5)],             # star + self-loop
-        [(_r.randint(0, 99), _r.randint(0, 99)) for _ in range(200)],
-        [("a", "b"), ("b", "c"), ("x", "y")],                 # strings
-    ]
-    from etl_wrap_spark.operators import dedup
+_GRAPH_EDGES = {
+    # duplicate edges, self-loops and a 12-edge chain ride along in the
+    # random graph; its 75 in-graph seeds span two uint64 lanes of the
+    # harmonic seed bitmask, and seed 500 is not in the graph
+    "random": (
+        "LONG",
+        [(a, b, (a * 7 + b) % 9 + 1) for a, b in (
+            ((i * 37) % 151, (i * 11 + 5) % 151) for i in range(400))]
+        + [(3, 8, 2)] * 3 + [(4, 4, 1), (9, 9, 5)]
+        + [(1000 + i, 1001 + i, 1) for i in range(12)],
+        list(range(0, 150, 2)) + [500],
+    ),
+    "strings": (
+        "STRING",
+        [("a", "b", 1), ("b", "c", 2), ("c", "a", 1), ("a", "b", 1),
+         ("x", "y", 3), ("y", "y", 1)],
+        ["a", "x", "zz"],
+    ),
+    "null_endpoint": (
+        "LONG", [(1, 2, 1), (2, 3, 1), (3, 1, 2), (None, 4, 1), (4, None, 1)], [1, 2],
+    ),
+    "null_seed": ("LONG", [(1, 2, 1), (2, 3, 1), (3, 1, 2), (3, 4, 1)], [1, None]),
+    "empty": ("LONG", [], [1]),
+}
 
-    for edges in edge_sets:
-        typ = "STRING" if isinstance(edges[0][0], str) else "LONG"
-        pairs = spark.createDataFrame(edges, f"id_a {typ}, id_b {typ}")
-        fast = {r.doc_id: r.component
-                for r in dedup.connected_components(pairs).collect()}
-        slow = {r.doc_id: r.component
-                for r in dedup.connected_components(
-                    pairs, max_iter=60, small_graph_limit=0).collect()}
-        assert fast == slow
-        if not any(u == v for u, v in edges):
-            star_fast = {r.doc_id: r.component
-                         for r in dedup.connected_components_star(pairs).collect()}
-            star_slow = {r.doc_id: r.component
-                         for r in dedup.connected_components_star(
-                             pairs, small_graph_limit=0).collect()}
-            assert star_fast == star_slow == fast
+_HIERARCHIES = {
+    "forest": (
+        "LONG",
+        [(i, i // 2) for i in range(2, 40)] + [(100 + i, 99 + i) for i in range(1, 16)],
+    ),
+    "dup_selfloop": (
+        "LONG", [(2, 1), (3, 2), (3, 2), (4, 3), (5, 5), (6, None), (7, 6)],
+    ),
+    "strings": ("STRING", [("b", "a"), ("c", "a"), ("d", "c")]),
+    "null_child": ("LONG", [(None, 1), (2, 1), (3, 2)]),
+    "dag": ("LONG", [(3, 1), (3, 2), (2, 1)]),
+    "empty": ("LONG", []),
+}
 
 
-def test_pagerank_fast_path_matches_distributed(spark):
-    # the small_graph_limit numpy fixed-point must be value-identical to
-    # the distributed iteration (same scaled-int floor divisions, same
-    # duplicate-edge multiplicity) across plain / weighted /
-    # personalized variants; small_graph_limit=0 forces the distributed
-    # run.
-    import random as _r
+def _graph_op(fn):
+    def run(spark, name):
+        typ, rows, seeds = _GRAPH_EDGES[name]
+        edges = spark.createDataFrame(rows, f"src {typ}, dst {typ}, w LONG")
+        sources = spark.createDataFrame([(s,) for s in seeds], f"node {typ}")
+        return fn(edges, sources)
+    return run
 
-    from etl_wrap_spark.operators.graph import pagerank_fixedpoint
 
-    _r.seed(29)
-    raw = [(_r.randint(0, 49), _r.randint(0, 49), _r.randint(1, 9))
-           for _ in range(300)]
-    raw += raw[:40]  # duplicate edges must contribute multiply
-    edges = spark.createDataFrame(raw, "src LONG, dst LONG, w LONG")
-    seeds = spark.createDataFrame([(i,) for i in range(0, 50, 7)], "node LONG")
+def _hierarchy_op(fn):
+    def run(spark, name):
+        typ, rows = _HIERARCHIES[name]
+        return fn(spark.createDataFrame(rows, f"child {typ}, parent {typ}"))
+    return run
 
-    for kw in ({}, {"weight": "w"}, {"seeds": seeds}):
-        fast = {r.node: r.rank_fp
-                for r in pagerank_fixedpoint(edges, iterations=3, **kw).collect()}
-        slow = {r.node: r.rank_fp
-                for r in pagerank_fixedpoint(
-                    edges, iterations=3, small_graph_limit=0, **kw).collect()}
-        assert fast == slow and len(fast) > 0
+
+_UNSEEDED = [n for n in _GRAPH_EDGES if n != "null_seed"]
+
+_FASTPATH_OPS = {
+    "cc": (_graph_op(lambda e, s: dedup.connected_components(
+        e, "src", "dst", max_iter=60)), _UNSEEDED),
+    "cc_star": (_graph_op(lambda e, s: dedup.connected_components_star(
+        e, "src", "dst")), _UNSEEDED),
+    "pagerank": (_graph_op(lambda e, s: graph.pagerank_fixedpoint(
+        e, iterations=3)), _UNSEEDED),
+    "pagerank_weighted": (_graph_op(lambda e, s: graph.pagerank_fixedpoint(
+        e, iterations=3, weight="w")), _UNSEEDED),
+    "pagerank_personalized": (_graph_op(lambda e, s: graph.pagerank_fixedpoint(
+        e, iterations=3, seeds=s)), list(_GRAPH_EDGES)),
+    "bfs": (_graph_op(lambda e, s: graph.bfs_hops(e, s, max_hops=3)), list(_GRAPH_EDGES)),
+    "sssp": (_graph_op(lambda e, s: graph.sssp_bounded(e, s, max_hops=3)), list(_GRAPH_EDGES)),
+    "harmonic": (_graph_op(lambda e, s: graph.harmonic_centrality(
+        e, s, max_hops=3)), list(_GRAPH_EDGES)),
+    "harmonic_with_sources": (_graph_op(lambda e, s: graph.harmonic_centrality(
+        e, s, max_hops=3, include_sources=True)), list(_GRAPH_EDGES)),
+    "flatten": (_hierarchy_op(incremental_join.flatten_hierarchy), list(_HIERARCHIES)),
+    "ancestor": (_hierarchy_op(incremental_join.ancestor_closure), list(_HIERARCHIES)),
+}
+
+
+def _outcome(spark, op, name):
+    try:
+        return sorted(
+            (tuple(r) for r in _FASTPATH_OPS[op][0](spark, name).collect()), key=repr
+        )
+    except ValueError as e:  # personalized PageRank with no seed in the graph
+        return repr(e)
+
+
+@pytest.mark.parametrize(
+    "op,name", [(op, n) for op, (_, inputs) in _FASTPATH_OPS.items() for n in inputs]
+)
+def test_fastpath_matches_distributed(spark, monkeypatch, op, name):
+    collects = []
+    real = fastpath._arrow_numpy_cols
+
+    def counting(df):
+        collects.append(1)
+        return real(df)
+
+    monkeypatch.setattr(fastpath, "_arrow_numpy_cols", counting)
+    default = _outcome(spark, op, name)
+    assert collects, "the default route never reached the driver collect"
+    n = len(collects)
+    with distributed_only():
+        forced = _outcome(spark, op, name)
+    assert len(collects) == n, "distributed_only() reached the driver collect"
+    assert default == forced
+
+    def refuse(df):
+        raise AssertionError("driver collect with the headroom check closed")
+
+    monkeypatch.setattr(fastpath, "_arrow_numpy_cols", refuse)
+    monkeypatch.setattr(fastpath, "_driver_headroom_ok", lambda: False)
+    assert _outcome(spark, op, name) == forced
+
+
+def test_harmonic_declined_route_evaluates_edges_once(spark, monkeypatch):
+    """Past the driver limit, harmonic_centrality's labeled frontier runs
+    over the edge projection the size probe already pinned: the caller's
+    edge pipeline is evaluated once per row, not once per pin."""
+    from pyspark.sql.types import LongType
+
+    monkeypatch.setattr(graph, "HARMONIC_DRIVER_EDGE_LIMIT", 1)
+    evals = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        evals.add(1)
+        return x
+
+    tag = F.udf(counted, LongType())
+    raw = [(i, (i * 7 + 3) % 30) for i in range(30)]
+    edges = spark.createDataFrame(raw, "src LONG, dst LONG").select(
+        tag("src").alias("src"), "dst"
+    )
+    seeds = spark.createDataFrame([(0,), (5,)], "node LONG")
+    out = graph.harmonic_centrality(edges, seeds, max_hops=3).collect()
+    assert out
+    assert evals.value == len(raw)
 
 
 def test_minhash_signatures_from_text_matches_groupby_form(spark):
@@ -2794,105 +2929,6 @@ def test_minhash_signatures_from_text_matches_groupby_form(spark):
     assert old == new and len(old) == 6 and 6 in new
 
 
-def test_bfs_fast_paths_match_distributed(spark):
-    # the CSR numpy BFS (multi-source and labeled) must agree with the
-    # distributed frontier iteration row-for-row, incl. isolated seeds
-    # and out-of-graph seeds (small_graph_limit=0 forces distributed)
-    import random as _r
-
-    from etl_wrap_spark.operators.graph import bfs_hops, bfs_hops_labeled
-
-    _r.seed(41)
-    raw = [(_r.randint(0, 79), _r.randint(0, 79)) for _ in range(240)]
-    edges = spark.createDataFrame(raw, "src LONG, dst LONG")
-    seeds = spark.createDataFrame(
-        [(1,), (5,), (500,)], "node LONG"  # 500 is not in the graph
-    )
-    fast = {(r.node, r.hops) for r in bfs_hops(edges, seeds, max_hops=3).collect()}
-    slow = {(r.node, r.hops)
-            for r in bfs_hops(edges, seeds, max_hops=3, small_graph_limit=0).collect()}
-    assert fast == slow and fast
-    lf = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(edges, seeds, max_hops=3).collect()}
-    ls = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(edges, seeds, max_hops=3,
-                                    small_graph_limit=0).collect()}
-    assert lf == ls and lf
-
-
-def test_harmonic_bitmask_fast_path_matches_distributed(spark):
-    # the seed-bitmask propagation must agree with the labeled-BFS
-    # aggregation on (n_sources, harmonic_micro) — random graph, >64
-    # seeds (two uint64 lanes), out-of-graph seed, include_sources both
-    import random as _r
-
-    from etl_wrap_spark.operators.graph import harmonic_centrality
-
-    _r.seed(53)
-    raw = [(_r.randint(0, 199), _r.randint(0, 199)) for _ in range(900)]
-    edges = spark.createDataFrame(raw, "src LONG, dst LONG")
-    seeds = spark.createDataFrame(
-        [(i,) for i in range(0, 140, 2)] + [(5000,)], "node LONG"  # 71 seeds
-    )
-    for inc in (False, True):
-        fast = {r.node: (r.n_sources, r.harmonic_micro)
-                for r in harmonic_centrality(
-                    edges, seeds, max_hops=3, include_sources=inc).collect()}
-        slow = {r.node: (r.n_sources, r.harmonic_micro)
-                for r in harmonic_centrality(
-                    edges, seeds, max_hops=3, include_sources=inc,
-                    small_graph_limit=0).collect()}
-        assert fast == slow and len(fast) > 50
-
-
-def test_graph_fast_paths_tolerate_nulls(spark):
-    # round-8 ADVICE: a NULL seed or NULL edge endpoint must not
-    # TypeError the numpy fast paths — the adaptive pick falls through
-    # to the distributed plan (which DEFINES null semantics: equi-joins
-    # drop null matches, bfs emits the (NULL, 0) seed row), so default
-    # and small_graph_limit=0 invocations stay value-identical.
-    from etl_wrap_spark.operators.graph import (
-        bfs_hops,
-        harmonic_centrality,
-        pagerank_fixedpoint,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (None, 4), (4, None)], "src LONG, dst LONG"
-    )
-    seeds = spark.createDataFrame([(1,), (None,)], "node LONG")
-    f = {(r.node, r.hops) for r in bfs_hops(edges, seeds, max_hops=2).collect()}
-    s = {(r.node, r.hops)
-         for r in bfs_hops(edges, seeds, max_hops=2, small_graph_limit=0).collect()}
-    assert f == s and (None, 0) in f
-    fh = {r.node: (r.n_sources, r.harmonic_micro)
-          for r in harmonic_centrality(edges, seeds, max_hops=2).collect()}
-    sh = {r.node: (r.n_sources, r.harmonic_micro)
-          for r in harmonic_centrality(
-              edges, seeds, max_hops=2, small_graph_limit=0).collect()}
-    assert fh == sh and fh
-    # bfs_hops_labeled (round-9 ADVICE — the opt-in fast path missed the
-    # round-8 hardening): a NULL seed routes the whole call distributed;
-    # the per-source relation must agree either way.
-    from etl_wrap_spark.operators.graph import bfs_hops_labeled
-
-    fl = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(
-              edges, seeds, max_hops=2, small_graph_limit=1 << 20).collect()}
-    sl = {(r.source, r.node, r.hops)
-          for r in bfs_hops_labeled(edges, seeds, max_hops=2).collect()}
-    assert fl == sl and (None, None, 0) in fl
-    # null-free edges + a NULL seed: pagerank's personalized fast path
-    # must filter the seed exactly as the distributed semi-join does
-    clean = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src LONG, dst LONG")
-    fp = {r.node: r.rank_fp
-          for r in pagerank_fixedpoint(clean, iterations=2, seeds=seeds).collect()}
-    sp = {r.node: r.rank_fp
-          for r in pagerank_fixedpoint(
-              clean, iterations=2, seeds=seeds, small_graph_limit=0).collect()}
-    assert fp == sp and fp
-
-
 def test_ancestor_closure_fast_path_matches_squaring(spark):
     # forest fast path must equal the repeated-squaring closure
     # (node, anc, dist) for trees and chains; a multi-parent DAG and a
@@ -2907,11 +2943,6 @@ def test_ancestor_closure_fast_path_matches_squaring(spark):
     for raw in (tree, chain):
         edges = spark.createDataFrame(raw, "child LONG, parent LONG")
         fast = {(r.node, r.anc, r.dist) for r in ancestor_closure(edges).collect()}
-        # fast == DISTRIBUTED parity pinned directly (round-8 ADVICE):
-        # small_graph_limit=0 forces the repeated-squaring path
-        dist = {(r.node, r.anc, r.dist)
-                for r in ancestor_closure(edges, small_graph_limit=0).collect()}
-        assert fast == dist
         parent = dict(raw)
         want = set()
         for k in parent:
@@ -2945,11 +2976,6 @@ def test_flatten_hierarchy_fast_path_matches_doubling(spark):
         edges = spark.createDataFrame(raw, "child LONG, parent LONG")
         fast = {(r.node, r.root, r.depth)
                 for r in flatten_hierarchy(edges).collect()}
-        # fast == DISTRIBUTED parity pinned directly (round-8 ADVICE):
-        # small_graph_limit=0 forces the pointer-doubling path
-        dist = {(r.node, r.root, r.depth)
-                for r in flatten_hierarchy(edges, small_graph_limit=0).collect()}
-        assert fast == dist
         parent = dict(raw)
         want = set()
         for k in parent:
@@ -3021,26 +3047,23 @@ def test_interpolate_linear_skips_null_valued_observations(spark):
 def test_connected_components_null_endpoint_fast_path_guard(spark):
     """Round-10 ADVICE regression: a NULL edge endpoint makes Arrow
     render int64 ids as float64/NaN in the driver union-find collect —
-    both CC variants must route such graphs distributed and agree with
-    the forced-distributed output instead of crashing/mislabeling."""
+    both CC variants must route such graphs distributed instead of
+    crashing/mislabeling (parity with the forced-distributed run is
+    pinned in test_fastpath_matches_distributed)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, None), (3, 4), (None, 5)], "id_a LONG, id_b LONG"
     )
-    want = {r["doc_id"]: r["component"]
-            for r in dedup.connected_components(
-                pairs, small_graph_limit=0).collect()}
     got = {r["doc_id"]: r["component"]
            for r in dedup.connected_components(pairs).collect()}
     star = {r["doc_id"]: r["component"]
             for r in dedup.connected_components_star(pairs).collect()}
-    assert got == want
     # star's u != v predicate drops NULL-endpoint edges entirely (NULL
     # comparisons are NULL), so only the intact components surface there
     assert star == {1: 1, 2: 1, 3: 3, 4: 3}
-    assert want[1] == want[2] == 1 and want[3] == want[4] == 3
+    assert got[1] == got[2] == 1 and got[3] == got[4] == 3
 
 
-def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(spark):
+def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(spark, monkeypatch):
     """known_small=True skips the size-probe job but must return the
     identical closure; a WRONG caller bound (limit smaller than the
     forest) must fall through to the distributed squaring, not
@@ -3055,7 +3078,7 @@ def test_ancestor_closure_known_small_matches_and_survives_wrong_bound(spark):
     fast = {(r["node"], r["anc"], r["dist"])
             for r in ancestor_closure(edges, known_small=True).collect()}
     assert fast == want
+    monkeypatch.setattr(incremental_join, "HIERARCHY_DRIVER_EDGE_LIMIT", 2)
     wrong = {(r["node"], r["anc"], r["dist"])
-             for r in ancestor_closure(
-                 edges, known_small=True, small_graph_limit=2).collect()}
+             for r in ancestor_closure(edges, known_small=True).collect()}
     assert wrong == want

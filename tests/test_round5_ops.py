@@ -1236,6 +1236,15 @@ def test_bfs_labeled_per_source_distances(spark):
         (0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3,
         (2, 2): 0, (2, 1): 1, (2, 3): 1, (2, 0): 2,
     }
+    # a NULL seed keeps its own hops-0 row and never equi-joins an edge
+    s_null = spark.createDataFrame([(0,), (None,)], "node long")
+    got_null = {
+        (r["source"], r["node"]): r["hops"]
+        for r in bfs_hops_labeled(e, s_null, max_hops=3).collect()
+    }
+    assert got_null == {
+        (0, 0): 0, (0, 1): 1, (0, 2): 2, (0, 3): 3, (None, None): 0,
+    }
 
 
 def test_harmonic_centrality_hand_sums(spark):

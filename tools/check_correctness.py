@@ -19,7 +19,7 @@ round-1 evidence:
 - temporals are normalized to ``pandas.Timestamp`` (q11/q12 passed
   with Spark/DuckDB timestamp representations differing in unit).
 
-Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query_name ...]
+Usage: python tools/check_correctness.py [--json OUT.json] [--distributed] [sf_dir] [query_name ...]
 
 Unknown query names are a hard error (exit 2): a "0 failures" report
 over zero selected queries is indistinguishable from a passing gate
@@ -27,10 +27,15 @@ over zero selected queries is indistinguishable from a passing gate
 results are also written in the driver's CORRECTNESS_r{N}.json shape
 ({rows_match, schema_match, hash_match, spark_rows, oracle_rows, err})
 so a full-catalog run yields a committable, judge-auditable artifact.
+With ``--distributed`` every query runs inside
+``operators.fastpath.distributed_only()``: the size-gated driver fast
+paths stay closed, so the distributed plans are checked against the
+same oracle.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import decimal
 import math
@@ -46,6 +51,7 @@ import numpy as np
 import pandas as pd
 
 from etl_wrap_spark import catalog
+from etl_wrap_spark.operators.fastpath import distributed_only
 from etl_wrap_spark.session import TABLES, get_session
 
 
@@ -103,6 +109,10 @@ def main():
             sys.exit(2)
         json_out = argv[1]
         argv = argv[2:]
+    route = contextlib.nullcontext
+    if argv and argv[0] == "--distributed":
+        route = distributed_only
+        argv = argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -138,7 +148,8 @@ def main():
         results[name] = rec
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with route():
+                sdf = fn(spark, sf_dir).toPandas()
             rec["spark_rows"] = len(sdf)
         except Exception as e:
             rec["err"] = f"spark error: {e}"
